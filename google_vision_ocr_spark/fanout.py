@@ -45,7 +45,11 @@ def fanout_target(df: DataFrame) -> int:
     return df.sparkSession.sparkContext.defaultParallelism
 
 
-def _current_partitions(df: DataFrame) -> int:
+def current_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s physical plan, memoized per source
+    frame.  Plans the frame but runs no job on an exchange-free plan;
+    under AQE a plan with a shuffle below it materializes that shuffle
+    to answer."""
     try:
         key = (df.sparkSession.sparkContext._jsc.hashCode(), df.semanticHash())
     except Exception:  # pragma: no cover - fall through to a raw probe
@@ -69,7 +73,7 @@ def fanout(df: DataFrame, *cols: str) -> DataFrame:
     if target <= 1:
         return df
     try:
-        current = _current_partitions(df)
+        current = current_partitions(df)
     except Exception:  # pragma: no cover - defensive: unplannable frame
         current = target
     if current >= target:

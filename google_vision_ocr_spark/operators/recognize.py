@@ -6,7 +6,7 @@ over a thread pool (``ocr_service.py:18-47`` + pools at :112-116 and
 (``ocr_service.py:226-228``) instead of failing the batch.
 
 Spark shape: one ``mapInPandas`` stage.  Each Arrow batch is recognized
-with a per-executor token-bucket rate limiter and bounded exponential
+with a per-task token-bucket rate limiter and bounded exponential
 backoff (BASELINE.json north_star: "rate-limited per executor with
 retry/backoff and idempotent outputs") — idempotency holds because the
 output is keyed by the deterministic ``(url, page)`` identity and the
@@ -26,7 +26,8 @@ from ..recognizers import RecognitionError, get_recognizer
 
 
 class TokenBucket:
-    """Per-executor-process rate limiter (qps; burst = qps)."""
+    """Rate limiter (qps; burst = qps), one per task: the job-wide rate
+    is up to ``qps`` times the tasks running at once."""
 
     def __init__(self, qps: float):
         self.qps = qps

@@ -8,18 +8,40 @@ scratch); this is the batch-job equivalent of its tempdir spool
 - The input is processed in **partition units** — deterministic buckets
   of the url space (``pmod(xxhash64(url), n_buckets)``), the stand-in
   for Iceberg partitions (``days(warc_ts)`` + url bucket) in this
-  parquet-only sandbox.
-- Each completed unit writes its output under
-  ``out/part=<k>/`` and then a **manifest row**
-  ``manifest/part=<k>.json`` with lineage (input fingerprint, row
-  counts) and counters (pages rasterized = rows recognized, OCR calls,
-  bytes extracted) gathered via ``df.observe`` — no second pass.
-- The manifest write happens only after the data write succeeds, and
-  partition output directories are overwritten atomically per unit, so
-  a kill between units leaves a consistent prefix; a kill *inside* a
-  unit leaves no manifest and the unit is redone idempotently
+  parquet-only implementation.  The bucket is the unit of lineage and
+  of resume.
+- Pending buckets run in **groups, one Spark job per group**, of
+  ``min(ceil(n_buckets × fanout_target / input_splits),
+  floor(n_buckets × maxPartitionBytes / input_bytes))`` buckets, at
+  least one (:func:`buckets_per_job`).  A group whose rows add up to
+  less than one cluster-wide wave of tasks gains no parallelism from
+  being split, and each extra job costs a full re-scan plus fixed job
+  overhead; but no group holds more than one scan split's worth of
+  input bytes.  So a small input (one scan split on a few cores) runs
+  every bucket in one job, on every core: the group is fanned out to
+  ``defaultParallelism`` tasks before the fused stage, and since
+  ``rate_limit_qps`` holds per task, the job-wide rate is up to that
+  many times it.  An input with far more scan splits than cores, or
+  with more than one split's worth of bytes per bucket — e.g. 10 GB
+  on 80 splits with 16 buckets and 400 cores — runs one bucket per
+  job.  Each per-bucket job still scans the whole input and filters
+  it: pruning those scans needs an input partitioned by the bucket,
+  which this job does not assume.
+- A group's job writes one ``partitionBy("part")`` parquet with dynamic
+  partition overwrite, so each bucket lands under ``data/part=<k>/``
+  and completed buckets' files are never touched; a bucket without
+  rows gets a schema-only file there.  Its per-bucket counters (docs,
+  pages rasterized = rows recognized, OCR calls, bytes extracted,
+  errors) are gathered in the same action by one ``df.observe`` of
+  conditional sums — no second pass.
+- Only after the job commits are the **manifest rows**
+  ``manifest/part-<k>.json`` written, in bucket order, each by an
+  atomic rename, with lineage (the group it committed with, the
+  output path) and counters.  A kill between manifests leaves a
+  consistent prefix; a kill *inside* a group's job leaves no manifest
+  for any of its buckets, and the whole group is redone idempotently
   (deterministic results ⇒ rewrite converges to identical bytes).
-- On restart, completed units are skipped by reading the manifest —
+- On restart, completed buckets are skipped by reading the manifest —
   the anti-join of work units against lineage.
 
 At real scale each unit is one Iceberg partition and units run from a
@@ -30,12 +52,14 @@ is still fully distributed across the cluster.
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..fanout import current_partitions, fanout, fanout_target
 from .fused import extract_fused
 
 MANIFEST_DIR = "manifest"
@@ -44,6 +68,10 @@ DATA_DIR = "data"
 
 def _bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
+
+
+def _bucket_path(output_path: str, bucket: int) -> str:
+    return os.path.join(output_path, DATA_DIR, f"part={bucket}")
 
 
 def completed_buckets(output_path: str) -> dict[int, dict]:
@@ -59,6 +87,83 @@ def completed_buckets(output_path: str) -> dict[int, dict]:
     return done
 
 
+def _input_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df``: the files' total size on
+    a file scan, ``Long.MaxValue`` where Spark cannot tell.  Runs no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def buckets_per_job(input_df: DataFrame, n_buckets: int) -> int:
+    """Buckets per Spark job: enough that a group's share of the input
+    splits fills one wave of ``fanout_target`` tasks, but no more than
+    one scan split's worth of input bytes
+    (``spark.sql.files.maxPartitionBytes``) per group: grouping saves
+    re-scans and job overhead, which matter only while a bucket's work
+    is small, and it must not put a mid-size input (gigabytes on fewer
+    splits than cores) behind one commit.  Uses fanout's memoized
+    partition probe and the plan's size estimate; neither runs a job
+    on a plain scan."""
+    splits = max(1, current_partitions(input_df))
+    by_splits = math.ceil(n_buckets * fanout_target(input_df) / splits)
+    conf = input_df.sparkSession._jsparkSession.sessionState().conf()
+    split_bytes = conf.filesMaxPartitionBytes()
+    by_bytes = n_buckets * split_bytes // max(1, _input_bytes(input_df))
+    return max(1, min(by_splits, by_bytes))
+
+
+def group_plan(input_df: DataFrame, group: list[int], n_buckets: int,
+               **extract_kwargs) -> DataFrame:
+    """The extraction of ``group``'s buckets, with their ``part``
+    column.  The filtered input is fanned out on url unless
+    ``salt_partitions`` is set, in which case ``extract_fused``
+    already shuffles it on url."""
+    src = input_df.filter(_bucket_col(n_buckets).isin(group))
+    if not extract_kwargs.get("salt_partitions"):
+        src = fanout(src, "url")
+    return extract_fused(src, **extract_kwargs).withColumn("part", _bucket_col(n_buckets))
+
+
+def _run_group(input_df: DataFrame, output_path: str, group: list[int],
+               n_buckets: int, extract_kwargs: dict) -> dict[int, dict]:
+    """One job: extract and write ``group``'s buckets; returns each
+    bucket's counters."""
+    values = {
+        "docs": F.lit(1),
+        "pages": F.col("n_pages"),
+        "ocr_calls": F.when(F.col("kind").isin("pdf", "image"), F.col("n_pages")),
+        "bytes_extracted": F.octet_length("text"),
+        "errors": F.col("n_errors"),
+    }
+    obs = Observation(f"extract-b{group[0]}-{group[-1]}")
+    observed = group_plan(input_df, group, n_buckets, **extract_kwargs).observe(
+        obs,
+        *[F.sum(F.when(F.col("part") == b, v)).alias(f"{name}:{b}")
+          for b in group for name, v in values.items()],
+    )
+    (observed.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("part").parquet(os.path.join(output_path, DATA_DIR)))
+    got = obs.get
+    counters = {b: {name: int(got[f"{name}:{b}"] or 0) for name in values} for b in group}
+    # the partitioned write makes no directory for a bucket without
+    # rows; give it a schema-only file so its manifest's output exists
+    # and an all-empty output still reads back
+    schema = observed.drop("part").schema
+    for b in group:
+        if not counters[b]["docs"]:
+            (input_df.sparkSession.createDataFrame([], schema).write.mode("overwrite")
+             .parquet(_bucket_path(output_path, b)))
+    return counters
+
+
+def _write_manifest(output_path: str, manifest: dict) -> None:
+    bucket = manifest["bucket"]
+    tmp = os.path.join(output_path, MANIFEST_DIR, f".part-{bucket}.json.tmp")
+    final = os.path.join(output_path, MANIFEST_DIR, f"part-{bucket}.json")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, final)  # atomic: manifest appears only when done
+
+
 def run_checkpointed_extract(
     spark: SparkSession,
     input_df: DataFrame,
@@ -67,7 +172,7 @@ def run_checkpointed_extract(
     fail_after_bucket: int | None = None,
     **extract_kwargs,
 ) -> dict:
-    """Extract ``input_df`` bucket-by-bucket, resuming past completed
+    """Extract ``input_df`` in bucket groups, resuming past completed
     buckets.  Returns a summary with per-bucket counters.
 
     ``fail_after_bucket`` injects a crash after the given bucket
@@ -75,43 +180,27 @@ def run_checkpointed_extract(
     """
     os.makedirs(os.path.join(output_path, MANIFEST_DIR), exist_ok=True)
     done = completed_buckets(output_path)
-    bucketed = input_df.withColumn("__bucket", _bucket_col(n_buckets))
-    summary = {"resumed_buckets": sorted(done), "processed_buckets": [], "counters": {}}
-    for bucket in range(n_buckets):
-        if bucket in done:
-            summary["counters"][bucket] = done[bucket]["counters"]
-            continue
-        part = bucketed.filter(F.col("__bucket") == bucket).drop("__bucket")
-        result = extract_fused(part, **extract_kwargs)
-        obs = Observation(f"extract-b{bucket}")
-        observed = result.observe(
-            obs,
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("n_pages").alias("pages"),
-            F.sum(F.when(F.col("kind").isin("pdf", "image"), F.col("n_pages")).otherwise(0))
-            .alias("ocr_calls"),
-            F.sum(F.octet_length("text")).alias("bytes_extracted"),
-            F.sum("n_errors").alias("errors"),
-        )
-        data_path = os.path.join(output_path, DATA_DIR, f"part={bucket}")
-        observed.write.mode("overwrite").parquet(data_path)
-        counters = {k: (int(v) if v is not None else 0) for k, v in obs.get.items()}
-        manifest = {
-            "bucket": bucket,
-            "n_buckets": n_buckets,
-            "counters": counters,
-            "completed_at_unix": int(time.time()),
-            "output": data_path,
-        }
-        tmp = os.path.join(output_path, MANIFEST_DIR, f".part-{bucket}.json.tmp")
-        final = os.path.join(output_path, MANIFEST_DIR, f"part-{bucket}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, final)  # atomic: manifest appears only when done
-        summary["processed_buckets"].append(bucket)
-        summary["counters"][bucket] = counters
-        if fail_after_bucket is not None and bucket >= fail_after_bucket:
-            raise RuntimeError(f"injected failure after bucket {bucket}")
+    summary = {"resumed_buckets": sorted(done), "processed_buckets": [],
+               "counters": {b: m["counters"] for b, m in done.items()}}
+    pending = [b for b in range(n_buckets) if b not in done]
+    per_job = buckets_per_job(input_df, n_buckets) if pending else 1
+    for i in range(0, len(pending), per_job):
+        group = pending[i:i + per_job]
+        counters = _run_group(input_df, output_path, group, n_buckets, extract_kwargs)
+        for bucket in group:
+            _write_manifest(output_path, {
+                "bucket": bucket,
+                "n_buckets": n_buckets,
+                "group": group,
+                "counters": counters[bucket],
+                "completed_at_unix": int(time.time()),
+                "output": _bucket_path(output_path, bucket),
+            })
+            summary["processed_buckets"].append(bucket)
+            summary["counters"][bucket] = counters[bucket]
+            if fail_after_bucket is not None and bucket >= fail_after_bucket:
+                raise RuntimeError(f"injected failure after bucket {bucket}")
+    summary["counters"] = dict(sorted(summary["counters"].items()))
     return summary
 
 

@@ -466,6 +466,7 @@ def extract_fused(
             items = items.repartition(salt_partitions, "url", "page")
         recognized = recognize_items(
             items, recognizer=recognizer, rate_limit_qps=rate_limit_qps,
+            max_retries=max_retries, backoff_base_s=backoff_base_s,
             otsu=otsu, do_deskew=do_deskew, dpi=dpi,
         )
         return assemble_docs(recognized)

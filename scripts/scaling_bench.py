@@ -94,19 +94,24 @@ def run_level(cores: int, pages_path: str, retries: int = 1) -> dict:
     """One fresh-JVM measurement at ``cores``.  A transient worker
     crash (socket reset when the shared host reclaims a python worker
     mid-batch) previously aborted the WHOLE multi-repeat session with
-    the completed repeats unreported; one retry per level keeps a
-    session alive through an isolated crash while still failing loudly
-    on anything systematic."""
+    the completed repeats unreported; one retry per level keeps the
+    run going through an isolated crash or timeout while still failing
+    loudly on anything systematic."""
     code = RUN_ONE.format(repo=REPO, cores=cores, pages_path=pages_path)
     last = None
-    for _ in range(retries + 1):
-        proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                              text=True, timeout=1800)
+    for attempt in range(retries + 1):
+        if attempt:
+            print(f"   retrying cores={cores} after failed run", flush=True)
+        try:
+            proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                                  text=True, timeout=1800)
+        except subprocess.TimeoutExpired as exc:
+            last = f"run timed out after {exc.timeout} s (cores={cores})"
+            continue
         for line in proc.stdout.splitlines():
             if line.startswith("RESULT "):
                 return json.loads(line[len("RESULT "):])
         last = f"run failed (cores={cores}):\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
-        print(f"   retrying cores={cores} after failed run", flush=True)
     raise RuntimeError(last)
 
 

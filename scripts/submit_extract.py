@@ -15,6 +15,17 @@ confs to spark-submit; the job code is identical (the session is
 obtained via ``SparkSession.builder.getOrCreate`` so submit-time confs
 win).  The run is resumable: re-submitting with the same ``--output``
 skips completed buckets via the manifest (per-partition lineage).
+
+Pending buckets run ``min(ceil(n_buckets × defaultParallelism ÷ input
+splits), floor(n_buckets × spark.sql.files.maxPartitionBytes ÷ input
+bytes))`` to a Spark job, at least one.  On a corpus with far more scan
+splits than cores, or more than one split's worth of bytes per bucket
+(any input above 1 GB with ``--n-buckets 16``), that is one bucket per job,
+so every bucket commits on its own; only a small input lets several
+buckets share a job, and a kill inside it redoes the whole group.  Each
+per-bucket job scans the whole input and filters it to its bucket:
+pruning those scans needs an input partitioned by the bucket.
+``--rate-limit-qps`` holds per running task, not per job.
 """
 
 from __future__ import annotations
@@ -31,7 +42,9 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--n-buckets", type=int, default=16)
     ap.add_argument("--salt-partitions", type=int, default=None)
-    ap.add_argument("--rate-limit-qps", type=float, default=None)
+    ap.add_argument("--rate-limit-qps", type=float, default=None,
+                    help="Vision calls per second per running task; the job-wide "
+                         "rate is up to this times the concurrent tasks")
     ap.add_argument("--recognizer", default="stub",
                     choices=["stub", "google-vision"])
     ap.add_argument("--otsu", action="store_true")

@@ -1,6 +1,9 @@
 """Physical-plan discipline (SURVEY.md §4): the plans we'd want at
 100 TB, not just plans that pass — pushdown, broadcast, partial agg."""
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -81,6 +84,27 @@ def test_fused_python_stage_is_arrow_native(spark, fixture_dir):
     # eval in the plan
     assert "MapInArrow" in plan
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+
+
+@pytest.mark.parametrize("salt", [None, 8])
+def test_checkpoint_group_shuffles_input_once(spark, fixture_dir, salt):
+    """A checkpoint group's fused stage gets its input through exactly
+    one url shuffle: fanout's to ``defaultParallelism`` on a one-split
+    input, or extract_fused's own under ``salt_partitions`` — never
+    both."""
+    from google_vision_ocr_spark.plans.checkpoint import group_plan
+
+    df = spark.read.parquet(fixture_dir["pages"])
+    plan = group_plan(df, [0, 1], 4, salt_partitions=salt)
+    # one repartition asked for, not two left for CollapseRepartition
+    assert plan._jdf.queryExecution().analyzed().toString().count("RepartitionByExpression") == 1
+    lines = _plan(plan).splitlines()
+    arrow = next(i for i, line in enumerate(lines) if "MapInArrow" in line)
+    scan = next(i for i, line in enumerate(lines) if "Scan parquet" in line)
+    exchanges = [line for line in lines[arrow:scan] if "Exchange" in line]
+    assert len(exchanges) == 1, exchanges
+    n = salt or spark.sparkContext.defaultParallelism
+    assert re.search(rf"hashpartitioning\(url#\d+, {n}\)", exchanges[0]), exchanges
 
 
 def test_extract_on_empty_input(spark):

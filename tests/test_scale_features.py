@@ -2,6 +2,7 @@
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from google_vision_ocr_spark import fixtures
@@ -56,6 +57,21 @@ def test_retry_recovers_from_transient_failures(spark, fixture_dir):
     for r in oracle.extract_table(rows):
         assert got[r.url]["n_errors"] == 0, r.url
         assert got[r.url]["text"] == r.text, r.url
+
+
+def test_page_level_salt_honours_max_retries(spark, fixture_dir):
+    """The staged page-level shape passes ``max_retries`` to recognition:
+    with no retry allowed, every flaky-stub OCR page is an error row."""
+    from google_vision_ocr_spark.plans.fused import extract_fused
+
+    df = spark.read.parquet(fixture_dir["pages"]).limit(20)
+    got = extract_fused(df, recognizer="flaky-stub", page_level_salt=True,
+                        salt_partitions=4, max_retries=0, backoff_base_s=0.01).collect()
+    ocr = [r for r in got if r["kind"] in ("pdf", "image") and r["n_pages"] > 0]
+    assert ocr
+    for r in ocr:
+        assert r["n_errors"] == r["n_pages"], r["url"]
+        assert r["text"].count("OCR Error for ID") == r["n_pages"], r["url"]
 
 
 def test_w2_handles_null_lang_and_empty_input(spark, tmp_path):
@@ -135,3 +151,35 @@ def test_linear_counting_saturation_and_empty(spark):
     row = distinct_linear_counting(empty, "k", m=8).collect()[0]
     assert row["occupied"] == 0
     assert row["estimate_e4"] == 0
+
+
+def test_scaling_bench_retries_a_timed_out_level(monkeypatch, capsys):
+    """A level that times out is retried like a failed one, and no
+    "retrying" line follows the last attempt."""
+    import importlib.util
+    import os
+    import subprocess
+    import types
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "scaling_bench.py")
+    spec = importlib.util.spec_from_file_location("scaling_bench_under_test", path)
+    sb = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sb)
+
+    outcomes = []
+
+    def fake_run(*args, **kwargs):
+        outcome = outcomes.pop(0)
+        if outcome is None:
+            raise subprocess.TimeoutExpired(args[0], kwargs["timeout"])
+        return types.SimpleNamespace(stdout=outcome, stderr="")
+
+    monkeypatch.setattr(sb.subprocess, "run", fake_run)
+    outcomes[:] = [None, 'RESULT {"pages_per_s": 1.0}\n']
+    assert sb.run_level(2, "unused") == {"pages_per_s": 1.0}
+    assert capsys.readouterr().out.count("retrying") == 1
+
+    outcomes[:] = [None, "no result\n"]
+    with pytest.raises(RuntimeError, match="run failed"):
+        sb.run_level(2, "unused")
+    assert capsys.readouterr().out.count("retrying") == 1
